@@ -126,7 +126,7 @@ object Bench {
     // the tail; the full per-query map stays on the line above and in
     // bench_out.json. Timing methodology unchanged.
     println(
-      s"""{"total_sec":${fmt(total)},"failed":$nFail$failedPart,"sf":"$sfDir","cpus":$cpus,"n_queries":${results.size}}""")
+      s"""{"total_sec":${fmt(total)},"failed":$nFail$failedPart,"sf":"$sfDir","cpus":"$cpus","n_queries":${results.size}}""")
     val qs = results.map { case (k, (v, _)) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val oks = results.map { case (k, (_, ok)) => s"\"" + k + "\":" + ok }

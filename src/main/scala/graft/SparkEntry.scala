@@ -689,9 +689,9 @@ object SparkEntry {
     },
     "trend_labels" -> { (s, dir) =>
       // horizons 5..20; integer OLS moments, engine-exact argmax.
-      // Production O(maxHorizon)-state scan over symbol x day chunks
-      // with the multi-day halo — bit-identical to the declarative
-      // chunked and whole-symbol window forms (pinned in ScalaTest)
+      // Production O(maxHorizon)-state scan, one ordered pass per
+      // symbol — bit-identical to the declarative window form
+      // (pinned in ScalaTest)
       usTs("ts")(
         operators.TrendScan
           .labelsScan(TradeData.fromEvents(s, dir), minHorizon = 5, maxHorizon = 20)
@@ -736,9 +736,8 @@ object SparkEntry {
         .orderBy(col("symbol"), col("d"))
     },
     "frac_diff" -> { (s, dir) =>
-      // chunked scan: bit-identical to the window form (pinned in
-      // ScalaTest), parallelism symbol x day instead of one sorted
-      // window per symbol
+      // ring scan, one ordered pass per symbol: bit-identical to the
+      // window form (pinned in ScalaTest)
       val t = TradeData.fromEvents(s, dir)
       usTs("ts")(
         FracDiff

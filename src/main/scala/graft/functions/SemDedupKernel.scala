@@ -45,8 +45,18 @@ object SemDedupKernel {
     * measurement aid for same-binary A/Bs; both paths are bit-equal
     * by construction (same per-dot accumulation order) and pinned.
     */
-  private val tiled: Boolean =
-    sys.env.get("GRAFT_SEMDEDUP_TILED").forall(_.toBoolean)
+  private lazy val tiled: Boolean = parseTiled(sys.env.get("GRAFT_SEMDEDUP_TILED"))
+
+  /** `true`/`false` in any case; unset means tiled. Lazy above, so a
+    * bad value fails the first scoring call with this message rather
+    * than the object's initializer.
+    */
+  private[graft] def parseTiled(v: Option[String]): Boolean = v match {
+    case None => true
+    case Some(s) if s.equalsIgnoreCase("true") => true
+    case Some(s) if s.equalsIgnoreCase("false") => false
+    case Some(s) => throw new IllegalArgumentException(s"GRAFT_SEMDEDUP_TILED must be true or false, got '$s'")
+  }
 
   def verdicts(
       ids: Array[Long],

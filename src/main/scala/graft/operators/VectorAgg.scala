@@ -162,7 +162,6 @@ object VectorAgg {
       case t => throw new IllegalArgumentException(
         s"assignSumByMatrix vec column must be array<float|double> with containsNull=false, got $t")
     }
-    val nCells = centIds.length
     val rdd = nv.queryExecution.toRdd
     type M = scala.collection.mutable.LongMap[VecSum]
     val partials = rdd.mapPartitions { it =>

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 import graft.api.TradingCols
 
@@ -27,9 +28,11 @@ object TradeData {
     *   - TIMESTAMP(NANOS): Spark 4 only reads it via the
     *     `nanosAsLong` legacy conf → LongType nanos, truncate to µs;
     *   - µs, isAdjustedToUTC=false → TIMESTAMP_NTZ under Spark 4's
-    *     inferTimestampNTZ default: wall clock ≡ UTC. timestampdiff
-    *     on NTZ subtracts raw internal micros, so the conversion
-    *     never touches the session timezone (a cast NTZ→TZ would);
+    *     inferTimestampNTZ default: wall clock ≡ UTC, so the raw
+    *     internal micros pass through unchanged
+    *     ([[graft.functions.NtzAsUtcExpr]]) and the session timezone
+    *     is never consulted (a cast NTZ→TZ would shift them, and
+    *     misplace wall clocks inside that zone's DST gaps);
     *   - µs, UTC-adjusted → TimestampType, already epoch micros.
     */
   def normalizeTs(df: DataFrame, name: String = "ts"): Column =
@@ -37,8 +40,7 @@ object TradeData {
       case org.apache.spark.sql.types.LongType =>
         timestamp_micros(expr(s"$name div 1000"))
       case org.apache.spark.sql.types.TimestampNTZType =>
-        timestamp_micros(
-          expr(s"timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', $name)"))
+        ColumnBridge.toColumn(graft.functions.NtzAsUtcExpr(ColumnBridge.toExpression(col(name))))
       case org.apache.spark.sql.types.TimestampType => col(name)
       case other =>
         throw new IllegalArgumentException(

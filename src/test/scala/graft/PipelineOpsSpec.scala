@@ -1048,6 +1048,14 @@ class PipelineOpsSpec extends SparkSpec {
     }
   }
 
+  test("GRAFT_SEMDEDUP_TILED parses true/false in any case and names itself on a bad value") {
+    import graft.functions.SemDedupKernel.parseTiled
+    assert(parseTiled(None) && parseTiled(Some("true")) && parseTiled(Some("TRUE")))
+    assert(!parseTiled(Some("false")) && !parseTiled(Some("False")))
+    val e = intercept[IllegalArgumentException](parseTiled(Some("yes")))
+    assert(e.getMessage.contains("GRAFT_SEMDEDUP_TILED") && e.getMessage.contains("yes"))
+  }
+
   test("tiled cell assignment matches the expression form exactly (ivfTopK past the 256-cell gate)") {
     import spark.implicits._
     val rnd = new scala.util.Random(31)

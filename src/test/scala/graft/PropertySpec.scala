@@ -463,33 +463,21 @@ class PropertySpec extends SparkSpec with TableDrivenPropertyChecks {
   }
 
   test("chunked trend scan is bit-identical to the whole-symbol window form") {
-    // sf0.01 days (~66 rows) need a single-day halo; sf0.001 days
-    // (~7 rows) force the multi-day halo path — both must match the
-    // whole-symbol form exactly
+    // sf0.01 (~66 rows a day) and sf0.001 (~7 rows a day): the
+    // production O(maxHorizon)-state scan, one pass per symbol, must
+    // match the whole-symbol window form exactly
     for (sf <- Seq("sf0.01", "sf0.001")) {
       val t = graft.sources.TradeData.fromEvents(spark, s"/root/testdata/$sf")
       val a = operators.TrendScan.labels(t, 5, 20)
         .orderBy("symbol", "ts")
         .as[(String, java.sql.Timestamp, Double, Int, Int, Double, Double)]
         .collect().toSeq
-      val b = operators.TrendScan.labelsChunked(t, 5, 20)
-        .orderBy("symbol", "ts")
-        .as[(String, java.sql.Timestamp, Double, Int, Int, Double, Double)]
-        .collect().toSeq
-      assert(a.size == b.size && a.nonEmpty)
-      for ((x, y) <- a.zip(b)) {
-        assert(x._1 == y._1 && x._2 == y._2 && x._4 == y._4 && x._5 == y._5)
-        // doubles must be BIT-equal (identical integer moments + trees)
-        assert(java.lang.Double.doubleToLongBits(x._6) == java.lang.Double.doubleToLongBits(y._6))
-        assert(java.lang.Double.doubleToLongBits(x._7) == java.lang.Double.doubleToLongBits(y._7))
-      }
-      // the production O(maxHorizon)-state scan: same chunks, same
-      // integers, same trees — bit-equal to both declarative forms
       val s = operators.TrendScan.labelsScan(t, 5, 20)
         .orderBy("symbol", "ts")
         .as[(String, java.sql.Timestamp, Double, Int, Int, Double, Double)]
         .collect().toSeq
-      assert(s.size == a.size)
+      assert(s.size == a.size && a.nonEmpty)
+      // same integers, same trees: doubles must be BIT-equal
       for ((x, y) <- a.zip(s)) {
         assert(x._1 == y._1 && x._2 == y._2 && x._4 == y._4 && x._5 == y._5)
         assert(java.lang.Double.doubleToLongBits(x._6) == java.lang.Double.doubleToLongBits(y._6))

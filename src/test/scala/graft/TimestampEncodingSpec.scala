@@ -66,6 +66,10 @@ class TimestampEncodingSpec extends SparkSpec {
     writeFixture(s"$base/ntz", TimestampNTZType,
       java.time.LocalDateTime.ofEpochSecond(usValue / 1000000L, ((usValue % 1000000L) * 1000L).toInt,
         java.time.ZoneOffset.UTC))
+    // an NTZ wall clock inside America/New_York's 2021 spring-forward
+    // gap: it exists as UTC and must not be shifted by the session zone
+    val gapValue = java.time.Instant.parse("2021-03-14T02:30:00Z")
+    writeFixture(s"$base/ntz_gap", TimestampNTZType, java.time.LocalDateTime.parse("2021-03-14T02:30:00"))
     val ntzRead = spark.read.parquet(s"$base/ntz/events.parquet")
     assert(ntzRead.schema("ts").dataType == TimestampNTZType,
       s"fixture (c) must round-trip as NTZ, got ${ntzRead.schema("ts").dataType}")
@@ -93,6 +97,8 @@ class TimestampEncodingSpec extends SparkSpec {
         assert(readMicros(s"$base/nanos") == expected, s"nanos encoding under tz=$tz")
         assert(readMicros(s"$base/ltz") == expected, s"µs-LTZ encoding under tz=$tz")
         assert(readMicros(s"$base/ntz") == expected, s"µs-NTZ encoding under tz=$tz")
+        assert(readMicros(s"$base/ntz_gap") == Seq((7L, gapValue.getEpochSecond * 1000000L)),
+          s"µs-NTZ wall clock in a DST gap under tz=$tz")
         assert(readMicros(s"$base/ms") == expectedMs, s"ms encoding under tz=$tz")
         assert(readMicros(s"$base/int96") == expectedMs, s"int96 encoding under tz=$tz")
       }
